@@ -100,7 +100,9 @@ object Layout {
     * deletes the whole table first, which at 100 TB converts a one-day
     * reprocess into a full-corpus rewrite (and a window where readers see
     * an empty table). Scoped via the writer option, not session config,
-    * so concurrent writes elsewhere keep their own semantics.
+    * so concurrent writes elsewhere keep their own semantics. Every
+    * `batch_id`-partitioned streaming sink writes through this, so an
+    * at-least-once `foreachBatch` replay replaces its own partition.
     */
   def overwritePartitions(df: DataFrame, partCol: String, path: String): Unit =
     df.write.mode("overwrite")

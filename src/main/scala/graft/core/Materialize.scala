@@ -25,14 +25,15 @@ import org.apache.spark.storage.StorageLevel
   *  - `replicated`: `persist(MEMORY_AND_DISK_2)` — blocks survive one
   *    executor loss AND lineage is kept, so even a double loss recomputes
   *    instead of failing. Costs a second copy's memory/disk + replication
-  *    traffic. The blocks are reclaimed by the context cleaner once the
-  *    returned frame is unreferenced (same lifecycle as localCheckpoint
-  *    blocks).
+  *    traffic. The persist is registered with the session's CacheManager,
+  *    which holds the blocks until someone calls `unpersist` on it — the
+  *    GC does NOT reclaim them when the returned frame goes unreferenced.
   *  - `checkpoint`: reliable checkpoint into
-  *    `SparkContext.setCheckpointDir` (set it to durable storage on a
-  *    cluster; a JVM-temp dir is auto-set here if missing so the mode is
-  *    testable locally). Survives any executor loss; costs a full write +
-  *    read-back of the table.
+  *    `SparkContext.setCheckpointDir`. Survives any executor loss; costs
+  *    a full write + read-back of the table. On a cluster the dir must be
+  *    set to durable storage first — an unset dir fails the pin loudly
+  *    ([[fallbackCheckpointDir]]); only a `local[...]` master gets a
+  *    JVM-temp dir auto-set so the mode is testable locally.
   *
   * All three are result-invisible — same rows, same values; only the
   * storage/lineage strategy differs (spec-pinned by MaterializeSpec).
@@ -56,10 +57,23 @@ object Materialize {
       case "checkpoint" =>
         val sc = s.sparkContext
         if (sc.getCheckpointDir.isEmpty)
-          sc.setCheckpointDir(java.nio.file.Files
-            .createTempDirectory("graft-materialize-ckpt").toString)
+          sc.setCheckpointDir(fallbackCheckpointDir(sc.master))
         df.checkpoint(eager = eager)
       case _ => df.localCheckpoint(eager = eager)
     }
+  }
+
+  /** Checkpoint dir for `checkpoint` mode when none is set: a JVM-temp
+    * dir on a `local[...]` master, where executors share the driver's
+    * disk; a throw anywhere else — a temp dir there is neither durable nor
+    * visible to every executor, so using one would silently void the
+    * durability the mode was chosen for.
+    */
+  private[core] def fallbackCheckpointDir(master: String): String = {
+    if (master != "local" && !master.startsWith("local["))
+      throw new IllegalStateException(
+        s"$ConfKey=checkpoint on master '$master' needs a durable " +
+          "checkpoint dir: call SparkContext.setCheckpointDir first")
+    java.nio.file.Files.createTempDirectory("graft-materialize-ckpt").toString
   }
 }

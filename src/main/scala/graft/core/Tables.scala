@@ -118,19 +118,16 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Compressed input bytes one spread task should own, floor 1 task, cap
-    * `defaultParallelism` — the scale-dependent knob behind
-    * [[loadSpread]]'s width, env-overridable
-    * (`SPARK_GRAFT_SPREAD_BYTES_PER_TASK`). 64 KiB compressed ≈ a few
+    * `defaultParallelism` — the scale-dependent constant behind
+    * [[loadSpread]]'s width. 64 KiB compressed ≈ a few
     * hundred KB of text ≈ tens of ms of the heaviest per-row derivation
     * (shingle/k-gram hashing) per task — big enough that task scheduling
     * stops dominating, small enough that the heavy text queries keep
-    * full parallelism from sf1 up (they cap at the core count). A
-    * production deployment tunes this like `maxPartitionBytes` (§6.1);
-    * the local default exists for the kilobyte harness fixtures.
+    * full parallelism from sf1 up (they cap at the core count). Only
+    * the kilobyte harness fixtures sit below the cap; a production-sized
+    * table reaches it at any value of this constant (§6.1).
     */
-  private[graft] val SpreadBytesPerTask: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_BYTES_PER_TASK").flatMap(_.toLongOption)
-      .filter(_ > 0).getOrElse(64L * 1024)
+  private[graft] val SpreadBytesPerTask: Long = 64L * 1024
 
   /** Spread-store temp dirs live for the JVM and are deleted on exit —
     * without this, every (dir, table) pair leaves a full parquet copy
@@ -242,8 +239,8 @@ object Tables {
     if (df.rdd.getNumPartitions >= target) df
     else {
       val stem = s"$dir/$name"
-      // target rides in the key: a different core count or bytes-per-task
-      // override in the same JVM must not serve a stale layout
+      // target rides in the key: a different core count in the same JVM
+      // must not serve a stale layout
       val key = s"$stem@$fp#$target"
       val base = spreadCache.computeIfAbsent(key, _ => {
         val tmpPath = java.nio.file.Files

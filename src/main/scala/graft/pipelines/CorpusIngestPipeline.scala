@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.core.Layout
 import graft.stream.FileWatcher
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -75,13 +76,11 @@ object CorpusIngestPipeline {
       .withColumn("batch_id", lit(batchId))
       .cache()
     try {
-      fresh.select("content_key", "path", "text", "quality", "batch_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(corpusDir)
-      fresh.select("content_key", "batch_id").write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(ledgerDir)
+      Layout.overwritePartitions(
+        fresh.select("content_key", "path", "text", "quality", "batch_id"),
+        "batch_id", corpusDir)
+      Layout.overwritePartitions(fresh.select("content_key", "batch_id"),
+        "batch_id", ledgerDir)
     } finally { fresh.unpersist(); () }
   }
 

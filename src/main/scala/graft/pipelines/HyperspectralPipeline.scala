@@ -1,8 +1,8 @@
 package graft.pipelines
 
 import graft.catalog.Catalog
+import graft.core.Layout
 import graft.signals.Signals
-import graft.stream.FileWatcher
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -14,10 +14,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * hops (watch → Transfer → funcX tool → Publish → Search) collapse into
   * one Structured Streaming job with intra-cluster shuffles.
   *
-  * The EMD→signal-rows parse is pluggable (`parse`): tests inject a fixture
-  * parser (FIXTURES F1); a production deployment plugs a jHDF-based one.
-  * Everything downstream — reductions, normalization, catalog — is the real
-  * engine.
+  * The EMD→signal-rows parse is pluggable (`parse`): production passes
+  * [[graft.sources.Emd.parseFiles]], tests inject a fixture parser
+  * (FIXTURES F1). Everything downstream — reductions, normalization,
+  * catalog — is the real engine.
   */
 object HyperspectralPipeline {
 
@@ -40,11 +40,8 @@ object HyperspectralPipeline {
   def analyzeBatch(spark: SparkSession, signals: DataFrame, files: DataFrame,
       outDir: String, catalogPath: String, batchId: Long = 0L): Unit = {
     def sink(df: DataFrame, path: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
+      Layout.overwritePartitions(df.withColumn("batch_id", lit(batchId)),
+        "batch_id", path)
 
     val cube = Signals.explodeCube(Signals.firstWithNdimPerExperiment(signals, 3))
     sink(Signals.spectrum(cube), s"$outDir/spectrum")
@@ -89,22 +86,10 @@ object HyperspectralPipeline {
   def start(spark: SparkSession, watchDir: String, outDir: String,
       catalogPath: String, checkpoint: String,
       parse: DataFrame => DataFrame, drain: Boolean = false,
-      quarantineDir: Option[String] = None): StreamingQuery = {
-    val events = FileWatcher.fileEvents(spark, watchDir)
-    FileWatcher.start(events, checkpoint, drain) { (batch, batchId) =>
-      if (!batch.isEmpty) {
-        val files = batch.select("path", "content", "experiment_id").cache()
-        def analyze(fs: DataFrame): Unit =
-          analyzeBatch(spark, parse(fs), fs, outDir, catalogPath, batchId)
-        try {
-          quarantineDir match {
-            case None => analyze(files)
-            case Some(qDir) =>
-              Quarantine.run(spark, files, parse, qDir, batchId)(analyze)
-          }
-        } finally files.unpersist()
-      }
+      quarantineDir: Option[String] = None): StreamingQuery =
+    Quarantine.watch(spark, watchDir, checkpoint, parse, drain,
+      quarantineDir) { (fs, batchId) =>
+      analyzeBatch(spark, parse(fs), fs, outDir, catalogPath, batchId)
     }
-  }
 
 }

@@ -1,7 +1,10 @@
 package graft.pipelines
 
+import graft.core.Layout
+import graft.stream.FileWatcher
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Poison-pill quarantine for file-batch pipelines (shared by
   * [[HyperspectralPipeline]] and [[SpatiotemporalPipeline]]).
@@ -151,14 +154,36 @@ object Quarantine {
       val bad = attribute(paths, probe)
       if (bad.isEmpty) throw first
       import spark.implicits._
-      bad.toDF("path", "error")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(qDir)
+      Layout.overwritePartitions(
+        bad.toDF("path", "error").withColumn("batch_id", lit(batchId)),
+        "batch_id", qDir)
       val badSet = bad.map(_._1).toSet
       val good = files.filter(!col("path").isin(badSet.toSeq: _*))
       if (!good.isEmpty) analyze(good)
     }
+
+  /** The watch → analyze loop both instrument pipelines start: stream the
+    * `.emd` landings of `watchDir`, skip empty micro-batches, cache each
+    * batch's (path, content, experiment_id) rows for the analysis and any
+    * bisect probes, and run `analyze(files, batchId)` — through [[run]]
+    * when `quarantineDir` is set, directly (fail-fast) otherwise.
+    */
+  private[pipelines] def watch(spark: SparkSession, watchDir: String,
+      checkpoint: String, parse: DataFrame => DataFrame, drain: Boolean,
+      quarantineDir: Option[String])(
+      analyze: (DataFrame, Long) => Unit): StreamingQuery = {
+    val events = FileWatcher.fileEvents(spark, watchDir)
+    FileWatcher.start(events, checkpoint, drain) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val files = batch.select("path", "content", "experiment_id").cache()
+        try {
+          quarantineDir match {
+            case None => analyze(files, batchId)
+            case Some(qDir) =>
+              run(spark, files, parse, qDir, batchId)(analyze(_, batchId))
+          }
+        } finally files.unpersist()
+      }
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import graft.catalog.Catalog
+import graft.core.Layout
 import graft.multimodal.{ConvPoolModel, Inference, Media, MediaMeta, Multimodal}
 import graft.signals.Signals
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -27,11 +28,8 @@ object SpatiotemporalPipeline {
       outDir: String, catalogPath: String,
       infer: Dataset[Media] => DataFrame, batchId: Long = 0L): Unit = {
     def sink(df: DataFrame, path: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
+      Layout.overwritePartitions(df.withColumn("batch_id", lit(batchId)),
+        "batch_id", path)
 
     val video = Signals.explodeVideo(Signals.firstWithNdimPerExperiment(signals, 3))
     val framesU8 = Signals.normalizeFrames(video)
@@ -99,22 +97,10 @@ object SpatiotemporalPipeline {
   def start(spark: SparkSession, watchDir: String, outDir: String,
       catalogPath: String, checkpoint: String,
       parse: DataFrame => DataFrame, drain: Boolean = false,
-      quarantineDir: Option[String] = None): StreamingQuery = {
-    val events = graft.stream.FileWatcher.fileEvents(spark, watchDir)
-    graft.stream.FileWatcher.start(events, checkpoint, drain) { (batch, batchId) =>
-      if (!batch.isEmpty) {
-        val files = batch.select("path", "content", "experiment_id").cache()
-        def analyze(fs: DataFrame): Unit =
-          analyzeBatch(spark, parse(fs), fs, outDir, catalogPath,
-            defaultInfer, batchId)
-        try {
-          quarantineDir match {
-            case None => analyze(files)
-            case Some(qDir) =>
-              Quarantine.run(spark, files, parse, qDir, batchId)(analyze)
-          }
-        } finally files.unpersist()
-      }
+      quarantineDir: Option[String] = None): StreamingQuery =
+    Quarantine.watch(spark, watchDir, checkpoint, parse, drain,
+      quarantineDir) { (fs, batchId) =>
+      analyzeBatch(spark, parse(fs), fs, outDir, catalogPath, defaultInfer,
+        batchId)
     }
-  }
 }

@@ -58,12 +58,10 @@ object StreamingAnn {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          searchBatch(batch, indexed, topK, nBits, dim)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outPath)
+          graft.core.Layout.overwritePartitions(
+            searchBatch(batch, indexed, topK, nBits, dim)
+              .withColumn("batch_id", lit(batchId)),
+            "batch_id", outPath)
         }
         ()
       }

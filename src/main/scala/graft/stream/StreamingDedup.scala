@@ -55,12 +55,9 @@ object StreamingDedup {
           .withColumn("batch_id", lit(batchId))
           .cache()
         try {
-          fresh.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(outDir)
-          fresh.select("content_key", "batch_id").write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(ledgerDir)
+          graft.core.Layout.overwritePartitions(fresh, "batch_id", outDir)
+          graft.core.Layout.overwritePartitions(
+            fresh.select("content_key", "batch_id"), "batch_id", ledgerDir)
         } finally fresh.unpersist()
         ()
       }

@@ -2,12 +2,22 @@ package graft.tools
 
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dev tool: dump `explain("formatted")` for the headline queries into
-  * PLANS.md — the physical-plan evidence behind the scale claims
-  * (pushdown reaching the scan, broadcasts on dim legs, the bucketed
-  * join's missing Exchange, the DPP partition filter, the
-  * orderStatistics plan with no full-table shuffle). Run via
-  * `bash tools/plans.sh`.
+/** Dev tool: dump `explain("formatted")` plans.
+  *
+  * With no arguments it writes PLANS.md for the headline queries — the
+  * physical-plan evidence behind the scale claims (pushdown reaching the
+  * scan, broadcasts on dim legs, the bucketed join's missing Exchange,
+  * the DPP partition filter, the orderStatistics plan with no full-table
+  * shuffle). Run via `bash tools/plans.sh`.
+  *
+  * `PlanDump <tag> <suffix> <query>...` instead writes each NAMED query's
+  * plan to `plans/<tag>/<query>_<suffix>.txt` — the before/after plan
+  * evidence an optimization round commits next to its claims, e.g.
+  * `sbt "runMain graft.tools.PlanDump r15 before q1_agg q59_gap_fill"`.
+  *
+  * The sf dir comes from SPARK_GRAFT_SF_DIR (default sf0.001 — plan SHAPE
+  * is sf-independent; AQE runtime specialization is not captured either
+  * way).
   */
 object PlanDump {
 
@@ -101,26 +111,40 @@ object PlanDump {
       "on."))
 
   def main(args: Array[String]): Unit = {
+    require(args.isEmpty || args.length >= 3,
+      "usage: PlanDump [<tag> <suffix> <query>...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = graft.core.GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-plans")
     val qs = graft.SparkEntry.queries
-    val out = new StringBuilder
-    out.append("# PLANS — formatted physical plans for headline queries\n\n")
-    out.append(s"Generated by `graft.tools.PlanDump` at `$sfDir`. These are\n")
-    out.append("the plans the scale claims rest on; regenerate with\n")
-    out.append("`bash tools/plans.sh` after plan-affecting changes.\n")
-    Headliners.foreach { case (name, why) =>
-      val df = qs(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
+    def plan(name: String): String = {
+      val fn = qs.getOrElse(name, sys.error(s"unknown query $name"))
+      fn(spark, sfDir).queryExecution.explainString(
         ExplainMode.fromString("formatted"))
-      out.append(s"\n## $name\n\n$why\n\n```\n$plan```\n")
     }
-    val repoRoot = sys.env.getOrElse("GRAFT_REPO_ROOT",
-      sys.props.getOrElse("user.dir", "."))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(repoRoot, "PLANS.md"), out.toString)
-    println(s"wrote PLANS.md (${Headliners.size} queries)")
+    val repoRoot = java.nio.file.Paths.get(sys.env.getOrElse("GRAFT_REPO_ROOT",
+      sys.props.getOrElse("user.dir", ".")))
+    if (args.isEmpty) {
+      val out = new StringBuilder
+      out.append("# PLANS — formatted physical plans for headline queries\n\n")
+      out.append(s"Generated by `graft.tools.PlanDump` at `$sfDir`. These are\n")
+      out.append("the plans the scale claims rest on; regenerate with\n")
+      out.append("`bash tools/plans.sh` after plan-affecting changes.\n")
+      Headliners.foreach { case (name, why) =>
+        out.append(s"\n## $name\n\n$why\n\n```\n${plan(name)}```\n")
+      }
+      java.nio.file.Files.writeString(repoRoot.resolve("PLANS.md"), out.toString)
+      println(s"wrote PLANS.md (${Headliners.size} queries)")
+    } else {
+      val (tag, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
+      val outDir = repoRoot.resolve("plans").resolve(tag)
+      java.nio.file.Files.createDirectories(outDir)
+      names.foreach { name =>
+        val p = outDir.resolve(s"${name}_$suffix.txt")
+        java.nio.file.Files.writeString(p, plan(name))
+        println(s"wrote $p")
+      }
+    }
     spark.stop()
   }
 }

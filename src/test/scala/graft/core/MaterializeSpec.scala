@@ -44,4 +44,18 @@ class MaterializeSpec extends SparkSpec {
     assert(pinned.collect().map(_.toString).sorted.toSeq ==
       build().collect().map(_.toString).sorted.toSeq)
   }
+
+  test("checkpoint mode without a checkpoint dir fails loudly off local[...]") {
+    Seq("spark://host:7077", "yarn", "k8s://https://host:443",
+      "local-cluster[2,1,1024]").foreach { master =>
+      val e = intercept[IllegalStateException](
+        Materialize.fallbackCheckpointDir(master))
+      assert(e.getMessage.contains("SparkContext.setCheckpointDir"), master)
+    }
+    Seq("local", "local[4]", "local[*]", "local[2,3]").foreach { master =>
+      val dir = java.nio.file.Paths.get(Materialize.fallbackCheckpointDir(master))
+      assert(java.nio.file.Files.isDirectory(dir), master)
+      java.nio.file.Files.delete(dir)
+    }
+  }
 }

@@ -73,6 +73,28 @@ class CorpusIngestPipelineSpec extends SparkSpec {
     assert(after.toSeq == before.toSeq, "replay changed table state")
   }
 
+  test("replayed batch id overwrites its partitions — one copy in corpus and ledger") {
+    val base = Files.createTempDirectory("graft-corpus-replay")
+    val corpus = s"$base/corpus"; val ledger = s"$base/ledger"
+    val docs = Seq(("doc://a", good), ("doc://b", good + " and a second one"))
+      .toDF("path", "contentStr")
+      .select($"path", $"contentStr".cast("binary").as("content"))
+    def replay(): Unit = CorpusIngestPipeline.processBatch(spark, docs,
+      corpus, ledger, batchId = 7L, minQuality = 0.2)
+
+    replay()
+    replay() // full replay: the ledger already screens every doc
+    // replay after a crash between the corpus and ledger writes: the
+    // ledger lacks the batch, every doc passes the screen again, and the
+    // corpus partition must be REPLACED, not appended to
+    val lost = Paths.get(ledger, "batch_id=7")
+    assert(org.apache.hadoop.fs.FileUtil.fullyDelete(lost.toFile))
+    replay()
+
+    assert(spark.read.parquet(corpus).count() == 2)
+    assert(spark.read.parquet(ledger).count() == 2)
+  }
+
   // Pins the ledger probe resolving through the path's own filesystem: a
   // URI-form ledger (file:/...) is invisible to java.io.File, so the old
   // probe re-admitted every cross-batch duplicate — on hdfs://s3:// paths

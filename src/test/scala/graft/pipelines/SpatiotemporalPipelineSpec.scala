@@ -65,6 +65,33 @@ class SpatiotemporalPipelineSpec extends SparkSpec {
     assert(new String(bytes.slice(8, 12), "US-ASCII") == "AVI ")
   }
 
+  test("replayed batch id overwrites its partition — no duplicate side output") {
+    val session = spark
+    import session.implicits._
+    val base = Files.createTempDirectory("graft-st-replay")
+    val out = base.resolve("out").toString
+    val catalog = base.resolve("catalog").toString
+    val files = Seq(("vidR", "/w/vidR.emd", "replay-video".getBytes))
+      .toDF("experiment_id", "path", "content")
+
+    // same batch id twice = foreachBatch's at-least-once replay
+    SpatiotemporalPipeline.analyzeBatch(spark, parse(files), files, out,
+      catalog, SpatiotemporalPipeline.defaultInfer, 7L)
+    SpatiotemporalPipeline.analyzeBatch(spark, parse(files), files, out,
+      catalog, SpatiotemporalPipeline.defaultInfer, 7L)
+
+    assert(spark.read.parquet(s"$out/frames_u8").count() == 8) // once-worth
+    assert(spark.read.parquet(s"$out/detections").count() == 2)
+    val avis = {
+      import scala.jdk.CollectionConverters._
+      val s = Files.walk(base.resolve("out").resolve("artifacts"))
+      try s.iterator().asScala.count(_.getFileName.toString.endsWith(".avi"))
+      finally s.close()
+    }
+    assert(avis == 1)
+    assert(spark.read.parquet(catalog).count() == 1)
+  }
+
   test("multi-file micro-batch normalizes every file's video") {
     val watch = Files.createTempDirectory("graft-st-multi")
     val base = Files.createTempDirectory("graft-st-multi-out")

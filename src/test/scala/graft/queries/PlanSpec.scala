@@ -141,11 +141,18 @@ class PlanSpec extends SparkSpec {
     val narrow = Tables.loadSpread(spark, sf, "documents")
     assert(!planOf(narrow).contains("Exchange"),
       s"spread paid a per-query exchange:\n${planOf(narrow)}")
-    val bytes = {
-      val f = new java.io.File(s"$sf/documents.parquet")
-      if (f.isFile) f.length
-      else Option(f.listFiles).toSeq.flatten.filter(_.isFile).map(_.length).sum
+    // table bytes from the same Hadoop listing loadSpread sizes from
+    // (Tables.sourceFingerprint) — it skips the .crc sidecars a
+    // java.io.File walk would count
+    def listedBytes(path: String): Long = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(p, true)
+      var sum = 0L
+      while (it.hasNext) sum += it.next().getLen
+      sum
     }
+    val bytes = listedBytes(s"$sf/documents.parquet")
     val wantParts = math.min(spark.sparkContext.defaultParallelism.toLong,
       math.max(1L,
         (bytes + Tables.SpreadBytesPerTask - 1) / Tables.SpreadBytesPerTask))
@@ -163,8 +170,7 @@ class PlanSpec extends SparkSpec {
       .selectExpr("id", "repeat(uuid(), 4) as pad")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$bigTmp/documents.parquet")
-    val bigBytes = Option(new java.io.File(s"$bigTmp/documents.parquet")
-      .listFiles).toSeq.flatten.filter(_.isFile).map(_.length).sum
+    val bigBytes = listedBytes(s"$bigTmp/documents.parquet")
     assert(bigBytes >
       spark.sparkContext.defaultParallelism * Tables.SpreadBytesPerTask,
       s"fixture too small ($bigBytes B) to exercise the cap")
