@@ -26,6 +26,15 @@ object HyperspectralPipeline {
     * Runs inside `foreachBatch`, so each stage is a normal batch plan with
     * full Catalyst optimization.
     *
+    * One pass per attempt: `signals` (the parsed frame) is cached, so the
+    * four consumers — spectrum, intensity and metadata sinks and the PNG
+    * artifacts — parse each file once, and the intensity map the intensity
+    * sink and the artifacts share is cached too. Each cube is reduced
+    * inside its row ([[Signals.spectrumArray]], [[Signals.intensityArray]],
+    * the reference's in-memory `hs_image.sum(axis=…)`, hyperspectral.py:96,
+    * 104): no explode and no aggregate shuffle. Both caches are released
+    * when the attempt ends, failed or not.
+    *
     * The 3-D signal is selected PER experiment (hs.load is per file,
     * hyperspectral.py:51-66) — a batch can carry many files (startup
     * backlog with no maxFilesPerTrigger), and a global first-match would
@@ -43,18 +52,23 @@ object HyperspectralPipeline {
       Layout.overwritePartitions(df.withColumn("batch_id", lit(batchId)),
         "batch_id", path)
 
-    val cube = Signals.explodeCube(Signals.firstWithNdimPerExperiment(signals, 3))
-    sink(Signals.spectrum(cube), s"$outDir/spectrum")
-    val intensity = Signals.intensityMap(cube)
-    sink(intensity, s"$outDir/intensity")
-    sink(Signals.metadataSummary(signals), s"$outDir/metadata")
-    // sidecar image artifact (hyperspectral.py:106-107): batch-scoped so a
-    // replay — in particular the quarantine retry, which analyzes fewer
-    // files than the failed attempt — fully replaces the batch's artifact
-    // set instead of leaving orphans from later-quarantined rows
-    graft.sinks.Artifacts.writeBatch(
-      graft.sinks.Artifacts.intensityPngs(intensity), s"$outDir/artifacts",
-      batchId)
+    val parsed = signals.cache()
+    try {
+      val cube = Signals.firstWithNdimPerExperiment(parsed, 3)
+      sink(Signals.spectrumArray(cube), s"$outDir/spectrum")
+      val intensity = Signals.intensityArray(cube).cache()
+      try {
+        sink(intensity, s"$outDir/intensity")
+        sink(Signals.metadataSummary(parsed), s"$outDir/metadata")
+        // sidecar image artifact (hyperspectral.py:106-107): batch-scoped so
+        // a replay — in particular the quarantine retry, which analyzes
+        // fewer files than the failed attempt — fully replaces the batch's
+        // artifact set instead of leaving orphans from later-quarantined rows
+        graft.sinks.Artifacts.writeBatch(
+          graft.sinks.Artifacts.intensityPngs(intensity), s"$outDir/artifacts",
+          batchId)
+      } finally intensity.unpersist()
+    } finally parsed.unpersist()
 
     val docs = Catalog.dataciteDoc(
       files.select(col("path"), col("content"),

@@ -158,8 +158,8 @@ object Quarantine {
         bad.toDF("path", "error").withColumn("batch_id", lit(batchId)),
         "batch_id", qDir)
       val badSet = bad.map(_._1).toSet
-      val good = files.filter(!col("path").isin(badSet.toSeq: _*))
-      if (!good.isEmpty) analyze(good)
+      if (paths.exists(p => !badSet(p)))
+        analyze(files.filter(!col("path").isin(badSet.toSeq: _*)))
     }
 
   /** The watch → analyze loop both instrument pipelines start: stream the

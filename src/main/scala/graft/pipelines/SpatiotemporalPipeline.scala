@@ -22,7 +22,10 @@ object SpatiotemporalPipeline {
   /** Per-batch analysis over video signals ((T,X,Y) cubes in F1 layout).
     * Signal selection is per experiment and side outputs are idempotent
     * batch_id-partition overwrites — see HyperspectralPipeline.analyzeBatch
-    * for the rationale (multi-file batches; at-least-once replay).
+    * for the rationale (multi-file batches; at-least-once replay). The
+    * parsed `signals` are cached for the attempt, so the three consumers of
+    * the normalized frames (frames sink, video artifact, inference) parse
+    * each file once; the cache is released when the attempt ends.
     */
   def analyzeBatch(spark: SparkSession, signals: DataFrame, files: DataFrame,
       outDir: String, catalogPath: String,
@@ -31,21 +34,24 @@ object SpatiotemporalPipeline {
       Layout.overwritePartitions(df.withColumn("batch_id", lit(batchId)),
         "batch_id", path)
 
-    val video = Signals.explodeVideo(Signals.firstWithNdimPerExperiment(signals, 3))
-    val framesU8 = Signals.normalizeFrames(video)
-    sink(framesU8, s"$outDir/frames_u8")
-    // sidecar video artifact (temporal.py:26-35): batch-scoped so a replay
-    // (notably the quarantine retry, which analyzes fewer files) fully
-    // replaces the batch's artifact set — no orphans from quarantined rows
-    graft.sinks.Artifacts.writeBatch(
-      graft.sinks.Artifacts.videoArtifacts(framesU8), s"$outDir/artifacts",
-      batchId)
+    val parsed = signals.cache()
+    try {
+      val video = Signals.explodeVideo(Signals.firstWithNdimPerExperiment(parsed, 3))
+      val framesU8 = Signals.normalizeFrames(video)
+      sink(framesU8, s"$outDir/frames_u8")
+      // sidecar video artifact (temporal.py:26-35): batch-scoped so a replay
+      // (notably the quarantine retry, which analyzes fewer files) fully
+      // replaces the batch's artifact set — no orphans from quarantined rows
+      graft.sinks.Artifacts.writeBatch(
+        graft.sinks.Artifacts.videoArtifacts(framesU8), s"$outDir/artifacts",
+        batchId)
 
-    // inference input: the normalized frames as REAL grayscale PNGs (the
-    // same encoding the artifact sink uses) — the detector stage consumes
-    // decodable image media, per frame, exactly like the reference's
-    // per-frame YOLO pass (temporal.py:37-55)
-    sink(infer(frameMedia(framesU8)), s"$outDir/detections")
+      // inference input: the normalized frames as REAL grayscale PNGs (the
+      // same encoding the artifact sink uses) — the detector stage consumes
+      // decodable image media, per frame, exactly like the reference's
+      // per-frame YOLO pass (temporal.py:37-55)
+      sink(infer(frameMedia(framesU8)), s"$outDir/detections")
+    } finally parsed.unpersist()
 
     Catalog.publish(spark,
       Catalog.dataciteDoc(files.select(col("path"), col("content"),

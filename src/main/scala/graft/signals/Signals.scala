@@ -1,6 +1,6 @@
 package graft.signals
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Per-signal array analytics (SURVEY §2 C11/C12/E4/E5, §7 step 4) — the
@@ -9,12 +9,18 @@ import org.apache.spark.sql.functions._
   * tools/temporal.py:21-55).
   *
   * Layout: signals arrive as one row per signal (FIXTURES F1: flattened
-  * row-major `data` + `shape`), and every reduction first explodes to the
-  * long form — `(x, y, channel, counts)` for cubes, `(frame, x, y, v)` for
-  * video. Long form is the 100 TB-scalable choice (SURVEY §4): axis
+  * row-major `data` + `shape`). A cube arrives WHOLE from the parse — one
+  * detector acquisition is bounded (MB) and already sits in one row — so
+  * the pipeline reduces it in place ([[spectrumArray]], [[intensityArray]]:
+  * a typed flatMap over the row, no explode, no aggregate shuffle), the
+  * reference's in-memory `hs_image.sum(axis=…)`. The long form —
+  * `(x, y, channel, counts)` for cubes, `(frame, x, y, v)` for video — stays
+  * for data that arrives exploded or must outgrow one row (SURVEY §4): axis
   * reductions become shuffle-partition-local groupBys on a table that can
   * be partitioned by `(experiment_id, channel-bucket | frame)`, and no
-  * single array ever has to fit in one executor's memory.
+  * single array has to fit in one executor's memory. [[spectrum]] and
+  * [[intensityMap]] over [[explodeCube]] are also the reference the
+  * array forms are specified against (SignalsSpec).
   */
 object Signals {
 
@@ -85,6 +91,70 @@ object Signals {
   def spectrum(cube: DataFrame): DataFrame =
     cube.groupBy("experiment_id", "signal_idx", "channel")
       .agg(sum(col("counts")).as("counts"))
+
+  /** Array-form [[spectrum]]: Σ over both spatial axes of each selected
+    * cube row `(experiment_id, signal_idx, shape = [X, Y, S], data)`,
+    * summed in place over the row-major `data` → `(experiment_id,
+    * signal_idx, channel, counts)`, the long form's columns and types.
+    * Expects one row per (experiment_id, signal_idx), as
+    * [[firstWithNdimPerExperiment]] yields.
+    */
+  def spectrumArray(cubes: DataFrame): DataFrame = {
+    val spark = cubes.sparkSession
+    import spark.implicits._
+    cubeRows(cubes).flatMap { case (eid, idx, shape, data) =>
+      val (xy, s) = cubeGeometry(eid, idx, shape, data.length)
+      val acc = new Array[Double](s)
+      var cell = 0
+      while (cell < xy) {
+        val base = cell * s
+        var c = 0
+        while (c < s) { acc(c) += data(base + c); c += 1 }
+        cell += 1
+      }
+      Iterator.tabulate(s)(c => (eid, idx, c, acc(c)))
+    }.toDF("experiment_id", "signal_idx", "channel", "counts")
+  }
+
+  /** Array-form [[intensityMap]]: Σ over the energy axis of each selected
+    * cube row, summed in place → `(experiment_id, signal_idx, x, y,
+    * intensity)`, the long form's columns and types. Same input contract
+    * as [[spectrumArray]].
+    */
+  def intensityArray(cubes: DataFrame): DataFrame = {
+    val spark = cubes.sparkSession
+    import spark.implicits._
+    cubeRows(cubes).flatMap { case (eid, idx, shape, data) =>
+      val (xy, s) = cubeGeometry(eid, idx, shape, data.length)
+      val y = shape(1)
+      Iterator.tabulate(xy) { cell =>
+        val base = cell * s
+        var v = 0.0
+        var c = 0
+        while (c < s) { v += data(base + c); c += 1 }
+        (eid, idx, cell / y, cell % y, v)
+      }
+    }.toDF("experiment_id", "signal_idx", "x", "y", "intensity")
+  }
+
+  private def cubeRows(cubes: DataFrame)
+      : Dataset[(String, Int, Array[Int], Array[Double])] = {
+    val spark = cubes.sparkSession
+    import spark.implicits._
+    cubes.select(col("experiment_id"), col("signal_idx"), col("shape"),
+        col("data").cast("array<double>"))
+      .as[(String, Int, Array[Int], Array[Double])]
+  }
+
+  /** (X·Y, S) of a cube row, refusing by name a row that is not a 3-D
+    * cube or whose `data` length is not the product of its `shape`. */
+  private def cubeGeometry(eid: String, idx: Int, shape: Array[Int],
+      n: Int): (Int, Int) = {
+    require(shape.length == 3 && shape.map(_.toLong).product == n.toLong,
+      s"cube row (experiment_id=$eid, signal_idx=$idx): $n values for " +
+        s"shape [${shape.mkString(", ")}]")
+    (shape(0) * shape(1), shape(2))
+  }
 
   /** Calibrated energy axis in keV (SURVEY §2 E5, hyperspectral.py:69-74):
     * `(offset + increment · channel) / 1000`.

@@ -3,6 +3,7 @@ package graft.pipelines
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 import java.nio.file.Files
 
 /** End-to-end pipeline replay (SURVEY §3.1): drop files in a watch dir,
@@ -99,12 +100,17 @@ class HyperspectralPipelineSpec extends SparkSpec {
 
   // parser that refuses by name on POISON file content — the fixture
   // analog of the EMD reader's corruption guards
-  private def parsePoison(files: DataFrame): DataFrame = {
+  private def parsePoison(files: DataFrame): DataFrame = parseCounted(None)(files)
+
+  // parsePoison that also counts its per-file calls
+  private def parseCounted(calls: Option[LongAccumulator])(
+      files: DataFrame): DataFrame = {
     val session = spark
     import session.implicits._
     files.select(col("experiment_id"), col("path"), col("content"))
       .as[(String, String, Array[Byte])]
       .map { case (eid, path, bytes) =>
+        calls.foreach(_.add(1))
         require(!new String(bytes, "US-ASCII").contains("POISON"),
           s"corrupt EMD container in $path")
         val base = bytes.map(b => (b & 0xFF).toDouble).sum
@@ -114,6 +120,35 @@ class HyperspectralPipelineSpec extends SparkSpec {
       .toDF("experiment_id", "path", "signal_idx", "title", "ndim", "shape",
         "data", "metadata_json")
       .withColumn("data", col("data").cast("array<double>"))
+  }
+
+  test("an analysis attempt parses each file once and releases its caches") {
+    val session = spark
+    import session.implicits._
+    val base = Files.createTempDirectory("graft-pipe-once")
+    val out = base.resolve("out").toString
+    val catalog = base.resolve("catalog").toString
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    def batch(names: String*): DataFrame =
+      names.map(n => (n, s"/w/$n.emd", s"$n-bytes".getBytes))
+        .toDF("experiment_id", "path", "content")
+    val before = persisted
+
+    val calls = spark.sparkContext.longAccumulator("hs_parse_calls")
+    val files = batch("r1", "r2", "r3")
+    HyperspectralPipeline.analyzeBatch(spark, parseCounted(Some(calls))(files),
+      files, out, catalog, 1L)
+    assert(calls.value == 3L) // every consumer reads the one parse
+    assert(spark.read.parquet(s"$out/spectrum").count() == 6)
+    assert(spark.read.parquet(s"$out/intensity").count() == 12)
+    assert(persisted == before)
+
+    val poisoned = batch("ok", "POISON")
+    intercept[Exception] {
+      HyperspectralPipeline.analyzeBatch(spark, parsePoison(poisoned),
+        poisoned, out, catalog, 2L)
+    }
+    assert(persisted == before)
   }
 
   test("default fail-fast: a poison file crash-loops across restarts (the case quarantine exists for)") {

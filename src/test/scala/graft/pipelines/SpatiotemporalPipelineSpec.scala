@@ -3,6 +3,7 @@ package graft.pipelines
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 import java.nio.file.Files
 
 /** End-to-end spatiotemporal (video) pipeline replay: normalized uint8
@@ -12,12 +13,17 @@ import java.nio.file.Files
 class SpatiotemporalPipelineSpec extends SparkSpec {
 
   // fixture parser: one (T=2, X=2, Y=2) video per file, data from bytes
-  private def parse(files: DataFrame): DataFrame = {
+  private def parse(files: DataFrame): DataFrame = parseCounted(None)(files)
+
+  // the fixture parser, counting its per-file calls
+  private def parseCounted(calls: Option[LongAccumulator])(
+      files: DataFrame): DataFrame = {
     val session = spark
     import session.implicits._
     files.select(col("experiment_id"), col("path"), col("content"))
       .as[(String, String, Array[Byte])]
       .map { case (eid, path, bytes) =>
+        calls.foreach(_.add(1))
         val base = bytes.map(b => (b & 0xFF).toDouble).sum
         (eid, path, 0, "Video", 3, Seq(2, 2, 2),
           (0 until 8).map(i => base + i * i), "{}")
@@ -90,6 +96,24 @@ class SpatiotemporalPipelineSpec extends SparkSpec {
     }
     assert(avis == 1)
     assert(spark.read.parquet(catalog).count() == 1)
+  }
+
+  test("an analysis attempt parses each file once and releases its cache") {
+    val session = spark
+    import session.implicits._
+    val base = Files.createTempDirectory("graft-st-once")
+    val out = base.resolve("out").toString
+    val files = Seq("v1", "v2").map(n => (n, s"/w/$n.emd", s"video-$n".getBytes))
+      .toDF("experiment_id", "path", "content")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val calls = spark.sparkContext.longAccumulator("st_parse_calls")
+
+    SpatiotemporalPipeline.analyzeBatch(spark, parseCounted(Some(calls))(files),
+      files, out, base.resolve("catalog").toString,
+      SpatiotemporalPipeline.defaultInfer, 1L)
+    assert(calls.value == 2L) // frames sink, artifact and inference share it
+    assert(spark.read.parquet(s"$out/detections").count() == 4)
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
   test("multi-file micro-batch normalizes every file's video") {

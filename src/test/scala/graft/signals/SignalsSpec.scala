@@ -1,6 +1,7 @@
 package graft.signals
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Signal-analytics tests (FIXTURES F1): explode geometry, axis-reduction
@@ -85,6 +86,43 @@ class SignalsSpec extends SparkSpec {
     val df = Seq(Seq(10.0, 20.0, 15.0)).toDF("frame")
       .select(Signals.normalizeFrameArray(col("frame")).as("n"))
     assert(df.collect()(0).getAs[scala.collection.Seq[Int]]("n").toSeq == Seq(0, 255, 127))
+  }
+
+  test("array-form spectrum and intensity equal the long-form reductions") {
+    // two experiments with non-cubic shapes and integer counts (exact sums
+    // in any order), plus a 2-D decoy the ndim-3 selection must skip
+    def cube(x: Int, y: Int, s: Int) =
+      Seq.fill(x * y * s)(rnd.nextInt(1000).toDouble)
+    val sigs = Seq(
+      ("a", "exp/a.emd", 0, "HAADF", 2, Seq(3, 5), Seq.fill(15)(1.0), "{}"),
+      ("a", "exp/a.emd", 1, "EDS", 3, Seq(3, 5, 7), cube(3, 5, 7), "{}"),
+      ("b", "exp/b.emd", 2, "EDS", 3, Seq(2, 4, 6), cube(2, 4, 6), "{}")
+    ).toDF("experiment_id", "path", "signal_idx", "title", "ndim", "shape",
+      "data", "metadata_json")
+    val cubes = Signals.firstWithNdimPerExperiment(sigs, 3)
+    def sameRows(got: DataFrame, want: DataFrame): Unit = {
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        want.schema.map(f => (f.name, f.dataType)))
+      def bag(df: DataFrame) =
+        df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+      assert(bag(got) == bag(want))
+    }
+    val spec = Signals.spectrumArray(cubes)
+    sameRows(spec, Signals.spectrum(Signals.explodeCube(cubes)))
+    sameRows(Signals.intensityArray(cubes),
+      Signals.intensityMap(Signals.explodeCube(cubes)))
+    assert(spec.count() == 7 + 6)
+  }
+
+  test("array-form reductions refuse a row whose data does not fill its shape") {
+    val bad = Seq(("e9", 4, Seq(2, 2, 2), Seq.fill(7)(1.0)))
+      .toDF("experiment_id", "signal_idx", "shape", "data")
+    Seq(Signals.spectrumArray _, Signals.intensityArray _).foreach { f =>
+      val e = intercept[Exception](f(bad).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => Option(c.getMessage).exists(_.contains(
+          "cube row (experiment_id=e9, signal_idx=4): 7 values for shape [2, 2, 2]"))))
+    }
   }
 
   test("metadataSummary extracts nested fields") {
